@@ -377,15 +377,8 @@ def main() -> None:
         "subtotal_r17_set": round(
             sum(t for n, t in timings.items() if n in _R17_SET), 3
         ),
-        # Global-rank dual path (operators/ranking.py): benched timings
-        # measure the sharded prefix-sum production form (the default);
-        # the single-partition window parity form
-        # (CLINICAL_BI_SINGLE_PARTITION_RANK=1) is differential-pinned
-        # equal in tests.
-        "single_partition_rank": os.environ.get(
-            "CLINICAL_BI_SINGLE_PARTITION_RANK", "0"
-        )
-        != "0",
+        # Always false since the rank switch was removed; kept so old JSON compares.
+        "single_partition_rank": False,
         # Jaccard token mode (queries/textops.py): u64 hash-exact with
         # per-corpus injectivity audit is the default; str is the r8
         # baseline form.

@@ -1,67 +1,41 @@
-"""Sharded global ranking: ROW_NUMBER / NTILE over a total order without
-a SinglePartition sort.
+"""Sharded global ranking: ROW_NUMBER / NTILE / running SUM over a total
+order without a SinglePartition sort.
 
 ``Window.orderBy(...)`` with no ``partitionBy`` (or a low-cardinality
 ``partitionBy`` — 3 return-flags over 100 TB is the same problem) funnels
 the whole relation through one task. Rank is a prefix sum of row counts,
-and prefix sums decompose because addition is associative — the same
-argument :mod:`clinical_bi_spark.operators.packing` makes for sequence
-packing:
+and prefix sums decompose because addition is associative. This module is
+the engine's one implementation of that decomposition:
 
-1. range-partition by the full sort key (group cols + order cols) so
-   partitions hold disjoint, ordered key ranges;
-2. local row numbers per partition (JVM bit ops in the ungrouped case,
-   narrow ``mapInPandas`` cumcount in the grouped one — rows arrive
-   pre-sorted by ``sortWithinPartitions``);
-3. per-(partition, group) row COUNTS — one long per cell, bounded by
-   n_partitions x n_groups (callers with a high-cardinality group key
-   should use the ordinary partitioned window instead: Spark already
-   distributes that well) — folded into exclusive prefix offsets by a
-   broadcast inequality self-join over that tiny totals relation
-   (r16 optimization: the offsets used to be a driver ``collect`` +
-   ``createDataFrame`` round trip, which forced a separate job per
-   operator call; distributing them makes the whole operator ONE lazy
-   plan — a single job at the consumer's action);
-4. broadcast the exclusive prefix offsets back; global rank = offset +
-   local row number.
+1. range-partition by the full sort key so partitions hold disjoint,
+   ordered key ranges;
+2. a local per-shard value, computed in the JVM: the in-partition row
+   index that ``monotonically_increasing_id`` encodes
+   (:func:`global_row_number`), or a window partitioned by the
+   range-partition id (:func:`global_prefix_sums`) — neither can funnel,
+   neither crosses the Python boundary;
+3. per-shard totals (n_partitions x n_groups longs) folded into
+   exclusive prefix offsets by a broadcast inequality self-join over that
+   tiny relation (:func:`_excl_prefix_offsets`) — no driver ``collect``,
+   the whole operator is one lazy plan;
+4. broadcast the offsets back; global value = offset + local value.
 
 The data crosses the wire once (the range exchange). Range-partition
 boundaries come from sampling and may vary run to run, but the emitted
-ranks are partition-independent because the sort key is a TOTAL order —
+values are partition-independent because the sort key is a TOTAL order —
 every caller must include a tie-break column.
 
 :func:`ntile_from_rank` then maps ranks to SQL ``NTILE(k)`` buckets with
 exact integer arithmetic (first ``N mod k`` buckets take ``N div k + 1``
-rows, the rest ``N div k``), so the composition is value-identical to the
-single-partition ``F.ntile(k).over(...)`` form — pinned differentially in
+rows, the rest ``N div k``), so the composition is value-identical to
+``F.ntile(k).over(...)`` — pinned differentially in
 tests/test_analytics.py.
 """
 
 from __future__ import annotations
 
-import os
-from collections.abc import Iterator
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
-
-SINGLE_PARTITION_RANK_ENV = "CLINICAL_BI_SINGLE_PARTITION_RANK"
-
-
-def use_single_partition_rank() -> bool:
-    """Dual-path switch for the global-rank analytics queries
-    (evt_rfm_segmentation / m13_auc_rank / agg_equidepth_histogram).
-
-    Default (unset/0) = the SHARDED production path in this module — the
-    form a 1000-executor cluster needs. ``CLINICAL_BI_SINGLE_PARTITION_RANK=1``
-    selects the classic single-window parity form (one ``Window.orderBy``
-    ntile/row_number). Both paths are value-identical by construction
-    (ntile_from_rank's exact bucket arithmetic), which is why — unlike
-    the eviction flag — the PRODUCTION path can be the driver-adjudicated
-    default: it is graded directly against the NTILE/ROW_NUMBER SQL
-    oracle, and tests pin the two paths row-for-row besides."""
-    return os.environ.get(SINGLE_PARTITION_RANK_ENV, "0") == "1"
 
 
 def _excl_prefix_offsets(
@@ -74,11 +48,10 @@ def _excl_prefix_offsets(
     distributively from the per-(partition, group) totals relation
     (n_partitions x n_groups rows — tiny by the operator contract):
     ``offset(pid, g) = SUM(total(pid', g) WHERE pid' < pid)`` via a
-    broadcast inequality self-join + re-aggregation. Replaces the old
-    driver ``collect`` + ``createDataFrame`` round trip, so the caller's
+    broadcast inequality self-join + re-aggregation, so the caller's
     whole rank/cumsum plan is ONE lazy job. NULL group keys are real
-    groups (null-safe equality), exactly as the driver loop treated them;
-    a group's first partition (no predecessors) coalesces to offset 0."""
+    groups (null-safe equality); a group's first partition (no
+    predecessors) coalesces to offset 0."""
     ta, tb = tot.alias("rko_a"), tot.alias("rko_b")
     cond = F.col("rko_b.__pid") < F.col("rko_a.__pid")
     for c in part_cols:
@@ -99,138 +72,51 @@ def global_row_number(
     df: DataFrame,
     order_by: list[Column],
     *,
-    partition_by: list[str] | None = None,
     out_col: str = "rnk",
     n_partitions: int | None = None,
 ) -> DataFrame:
-    """Append 1-based ``out_col`` = ROW_NUMBER() OVER (PARTITION BY
-    partition_by ORDER BY order_by) without a SinglePartition exchange.
+    """Append 1-based ``out_col`` = ROW_NUMBER() OVER (ORDER BY order_by)
+    without a SinglePartition exchange.
 
     ``order_by`` are Column sort expressions (``F.col(...).desc()``
-    allowed) that must form a total order within each group;
-    ``partition_by`` are column NAMES (needed as pandas group keys) and
-    must be low-cardinality — the per-(partition, group) counts relation
-    (one long each) is the offsets self-join's broadcast side.
-
-    NULL group keys are handled explicitly (r9 ADVICE): SQL's
-    ROW_NUMBER() OVER (PARTITION BY g ...) puts NULLs in their own
-    partition, so the local cumcount groups with ``dropna=False``, the
-    pandas bookkeeping normalizes NaN/NaT keys to ``None`` (NaN is
-    unusable as a dict key — NaN != NaN breaks lookups), and the offset
-    join is null-safe (``<=>``); a plain equi-join would drop null-key
-    rows' offsets and silently restart their ranks per partition.
+    allowed) that must form a total order. A per-group rank with a
+    high-cardinality group key is an ordinary partitioned window (Spark
+    already distributes it); a low-cardinality grouped running count is
+    :func:`global_prefix_sums` with ``partition_by``.
     """
-    import pandas as pd
-
     from clinical_bi_spark.caching import persist_tracked
 
-    part_cols = list(partition_by or [])
-    spark = df.sparkSession
-    np_ = n_partitions or spark.sparkContext.defaultParallelism
-    sort_exprs = [F.col(c) for c in part_cols] + list(order_by)
+    np_ = n_partitions or df.sparkSession.sparkContext.defaultParallelism
     ranged = (
-        df.repartitionByRange(np_, *sort_exprs)
-        .sortWithinPartitions(*sort_exprs)
+        df.repartitionByRange(np_, *order_by)
+        .sortWithinPartitions(*order_by)
         .withColumn("__pid", F.spark_partition_id())
     )
-
-    if not part_cols:
-        # JVM fast path for the (only query-used) ungrouped case (r16
-        # optimization, guide §4 "eliminate the Python boundary"): the
-        # local per-partition row index is exactly what
-        # monotonically_increasing_id encodes — partition id in the upper
-        # 31 bits, the 0-based row index within the partition in the
-        # lower 33 (deterministic here: rows are sorted within the
-        # partition, and <2^33 rows/partition is the function's own
-        # documented bound, far above any real task size) — so the local
-        # cumcount needs no mapInPandas round-trip of the whole relation
-        # through Arrow/Python. The grouped path below keeps the pandas
-        # cumcount (per-group counters across batches have no JVM
-        # equivalent short of a window, which is what this operator
-        # exists to avoid).
-        local = persist_tracked(
-            ranged.withColumn(
-                "__local_rn",
-                F.monotonically_increasing_id().bitwiseAND(
-                    F.lit((1 << 33) - 1).cast("long")
-                )
-                + F.lit(1).cast("long"),
+    # The local per-partition row index is exactly what
+    # monotonically_increasing_id encodes — partition id in the upper 31
+    # bits, the 0-based row index within the partition in the lower 33
+    # (deterministic here: rows are sorted within the partition, and
+    # <2^33 rows/partition is the function's own documented bound, far
+    # above any real task size). persist: the offsets subtree and the
+    # main subtree must see ONE materialized partition layout
+    # (range-boundary sampling is nondeterministic across re-executions),
+    # and the cache pins it.
+    local = persist_tracked(
+        ranged.withColumn(
+            "__local_rn",
+            F.monotonically_increasing_id().bitwiseAND(
+                F.lit((1 << 33) - 1).cast("long")
             )
+            + F.lit(1).cast("long"),
         )
-        off_df = _excl_prefix_offsets(
-            local.groupBy("__pid").agg(F.count("*").alias("__n")),
-            [],
-            ["__n"],
-            ["__offset"],
-        )
-        joined = local.join(F.broadcast(off_df), ["__pid"], "left")
-        return joined.withColumn(
-            out_col,
-            (
-                F.coalesce(F.col("__offset"), F.lit(0)) + F.col("__local_rn")
-            ).cast("bigint"),
-        ).drop("__pid", "__local_rn", "__offset")
-
-    def local_rn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # rows arrive sorted; carry per-group counters across Arrow batches
-        seen: dict[tuple, int] = {}
-        for pdf in it:
-            if not len(pdf):
-                yield pdf.assign(__local_rn=pd.Series([], dtype="int64"))
-                continue
-            if part_cols:
-                base = (
-                    pdf.groupby(part_cols, sort=False, dropna=False).cumcount()
-                    + 1
-                )
-                # NaN/NaT -> None so tuples are stable dict keys
-                kdf = pdf[part_cols].astype(object)
-                kdf = kdf.where(kdf.notna(), None)
-                keys = pd.Series(
-                    list(kdf.itertuples(index=False, name=None)),
-                    index=pdf.index,
-                )
-                offs = keys.map(lambda k: seen.get(k, 0)).astype("int64")
-                for k, c in keys.value_counts().items():
-                    seen[k] = seen.get(k, 0) + int(c)
-                pdf = pdf.assign(__local_rn=(base + offs).astype("int64"))
-            else:
-                start = seen.get((), 0)
-                pdf = pdf.assign(
-                    __local_rn=pd.RangeIndex(start + 1, start + 1 + len(pdf))
-                )
-                seen[()] = start + len(pdf)
-            yield pdf
-
-    schema = StructType(
-        list(ranged.schema.fields) + [StructField("__local_rn", LongType())]
     )
-    # persist: the offsets subtree and the main subtree must see ONE
-    # materialized partition layout (range-boundary sampling is
-    # nondeterministic across re-executions), and the cache pins it
-    local = persist_tracked(ranged.mapInPandas(local_rn, schema=schema))
-
     off_df = _excl_prefix_offsets(
-        local.groupBy("__pid", *part_cols).agg(F.count("*").alias("__n")),
-        part_cols,
+        local.groupBy("__pid").agg(F.count("*").alias("__n")),
+        [],
         ["__n"],
         ["__offset"],
     )
-    if part_cols:
-        # null-safe offset join: NULL group keys are a real rank partition
-        off_df = off_df.select(
-            F.col("__pid").alias("__o_pid"),
-            *[F.col(c).alias(f"__o_{c}") for c in part_cols],
-            "__offset",
-        )
-        cond = F.col("__pid") == F.col("__o_pid")
-        for c in part_cols:
-            cond = cond & F.col(c).eqNullSafe(F.col(f"__o_{c}"))
-        joined = local.join(F.broadcast(off_df), cond, "left").drop(
-            "__o_pid", *[f"__o_{c}" for c in part_cols]
-        )
-    else:
-        joined = local.join(F.broadcast(off_df), ["__pid"], "left")
+    joined = local.join(F.broadcast(off_df), ["__pid"], "left")
     return joined.withColumn(
         out_col,
         (F.coalesce(F.col("__offset"), F.lit(0)) + F.col("__local_rn")).cast(
@@ -260,13 +146,12 @@ def global_prefix_sums(
     2. local cumulative sums per (partition, group) — a JVM window
        partitioned by the range-partition id (+ group cols), which can
        never funnel: its partition population is exactly one range
-       shard (r17; the r16 form was a ``mapInPandas`` cumcount that
-       shipped the whole relation through Arrow/Python);
+       shard;
     3. per-(partition, group) TOTALS of each value col — one long per
-       cell, a tiny relation (``partition_by`` must be low-cardinality,
-       like global_row_number's) — folded into exclusive prefix offsets
-       by the shared broadcast self-join (:func:`_excl_prefix_offsets`;
-       no driver collect, the whole operator is one lazy plan);
+       cell, a tiny relation (``partition_by`` must be low-cardinality)
+       — folded into exclusive prefix offsets by the shared broadcast
+       self-join (:func:`_excl_prefix_offsets`; no driver collect, the
+       whole operator is one lazy plan);
     4. broadcast exclusive prefix offsets back (null-safe join — NULL
        group keys are their own running-total partition, as in SQL);
        global running total = offset + local cumsum.
@@ -288,18 +173,15 @@ def global_prefix_sums(
     )
     cum_cols = [f"__cum_{c}" for c in value_cols]
 
-    # Local cumsum as a JVM window PARTITIONED BY the range-partition id
-    # (r17 optimization, guide §4 — eliminate the Python boundary; the
-    # r16 mapInPandas shipped the whole relation through Arrow/Python).
+    # Local cumsum as a JVM window PARTITIONED BY the range-partition id.
     # This window never funnels: its partition key is __pid (+ the group
     # cols), so partitions stay exactly the range shards — the hash
     # exchange it plans re-moves only this already-domain-bounded
     # relation, and the per-(pid, group) totals aggregate below then
     # rides the SAME hash(__pid) clustering with no further exchange.
-    # Value-identity with the pandas form: integer SUMs, window SUM
-    # skips NULLs exactly as fillna(0)+cumsum did, and COALESCE(.., 0)
-    # covers an all-NULL prefix (differential-pinned against the
-    # single-partition window in tests/test_analytics.py).
+    # Window SUM skips NULLs and COALESCE(.., 0) covers an all-NULL
+    # prefix (differential-pinned against the single-partition window in
+    # tests/test_analytics.py).
     w = (
         Window.partitionBy("__pid", *part_cols)
         .orderBy(*order_by)

@@ -5,9 +5,13 @@ fractions (ct_data.py:43-53): every run yields *exactly*
 floor(0.7·n)/floor(0.005·n)/rest rows. Spark's randomSplit is per-row
 Bernoulli — right scale behavior, different semantics. Both are provided:
 
-* :func:`exact_size_seeded_split` — parity: exact sizes, seeded. Needs a
-  global rank (one extra shuffle); fine up to ~10⁹ rows, documented
-  trade-off beyond that.
+* :func:`exact_size_seeded_split` — parity: exact sizes, seeded, ranked
+  by one global ``row_number`` window (a single-partition sort; fine for
+  reduced ML feature tables).
+* :func:`exact_size_seeded_split_distributed` — the same cut over the
+  sharded rank of :mod:`clinical_bi_spark.operators.ranking` (range
+  exchange + broadcast prefix offsets, no SinglePartition); identical
+  membership for the same seed and input partitioning.
 * :func:`keyed_hash_split` — scale path: deterministic per-key hash,
   no shuffle, reproducible across engines and runs (used by the
   m1_keyed_split oracle query).
@@ -19,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from clinical_bi_spark.caching import persist_tracked
+from clinical_bi_spark.operators.ranking import global_row_number
 from pyspark.sql.window import Window
 
 
@@ -46,12 +50,22 @@ def exact_size_seeded_split(
     ranked = df.withColumn(
         "__rank", F.row_number().over(Window.orderBy(*order_cols))
     )
-    train = ranked.filter(F.col("__rank") <= n_train).drop("__rank")
-    validate = ranked.filter(
-        (F.col("__rank") > n_train) & (F.col("__rank") <= n_train + n_validate)
-    ).drop("__rank")
-    test = ranked.filter(F.col("__rank") > n_train + n_validate).drop("__rank")
-    return train, validate, test
+    return _cut_ranked(ranked, n_train, n_validate)
+
+
+def _cut_ranked(
+    ranked: DataFrame, n_train: int, n_validate: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Cut a relation carrying a 1-based ``__rank`` into the three split
+    slices (train / validate / test) and drop the rank."""
+    rank = F.col("__rank")
+    return (
+        ranked.filter(rank <= n_train).drop("__rank"),
+        ranked.filter((rank > n_train) & (rank <= n_train + n_validate)).drop(
+            "__rank"
+        ),
+        ranked.filter(rank > n_train + n_validate).drop("__rank"),
+    )
 
 
 #: Fibonacci-hash constants: golden-ratio multiplier mixes *sequential*
@@ -102,74 +116,23 @@ def exact_size_seeded_split_distributed(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Exact-size 3-way split WITHOUT the single-partition global sort —
     the 100 TB form of :func:`exact_size_seeded_split` (same contract:
-    exact floor(frac·n) sizes, seeded, deterministic).
-
-    Global rank is decomposed into per-partition work:
-
-    1. ``repartitionByRange`` on the seeded random key — the only
-       full-data shuffle, uniform across partitions;
-    2. ``sortWithinPartitions`` + a running-counter ``mapInPandas`` —
-       narrow local rank, no window exchange;
-    3. per-partition counts → driver-side prefix sum (``n_partitions``
-       integers) → broadcast offset join: global_rank = offset + local.
-
-    The data crosses the wire once and no executor ever holds more than
-    its partition; the driver holds one integer per partition.
+    exact floor(frac·n) sizes, seeded, deterministic, and the same
+    membership for the same seed): the rank over (rand(seed),
+    order_key) is the sharded prefix sum of :func:`global_row_number`.
+    The data crosses the wire once (its range exchange) and no executor
+    ever holds more than its partition.
     """
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     n = df.count()
     n_train = int(train_frac * n)
     n_validate = int(validate_frac * n)
-    np_ = n_partitions or df.sparkSession.sparkContext.defaultParallelism
-    range_cols = [F.col("__r")] + ([F.col(order_key)] if order_key else [])
-
-    ranged = (
-        df.withColumn("__r", F.rand(seed))
-        .repartitionByRange(np_, *range_cols)
-        .sortWithinPartitions(*range_cols)
-        .withColumn("__pid", F.spark_partition_id())
-    )
-
-    def add_local_rank(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        seen = 0
-        for pdf in it:
-            pdf = pdf.assign(__local=range(seen, seen + len(pdf)))
-            seen += len(pdf)
-            yield pdf
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    schema = StructType(
-        list(ranged.schema.fields) + [StructField("__local", LongType())]
-    )
-    # persist: the count-per-partition job and the final job must see the
-    # same rand() draw / partition layout
-    ranked = persist_tracked(ranged.mapInPandas(add_local_rank, schema=schema))
-
-    counts = {
-        r["__pid"]: r["cnt"]
-        for r in ranked.groupBy("__pid").agg(F.count("*").alias("cnt")).collect()
-    }
-    offsets, acc = [], 0
-    for pid in sorted(counts):
-        offsets.append((pid, acc))
-        acc += counts[pid]
-    offset_df = df.sparkSession.createDataFrame(
-        offsets or [(0, 0)], "__pid int, __offset long"
-    )
-    ranked = ranked.join(F.broadcast(offset_df), "__pid").withColumn(
-        "__rank", F.col("__offset") + F.col("__local") + 1
-    )
-    drop = ["__r", "__pid", "__local", "__offset", "__rank"]
-    train = ranked.filter(F.col("__rank") <= n_train).drop(*drop)
-    validate = ranked.filter(
-        (F.col("__rank") > n_train) & (F.col("__rank") <= n_train + n_validate)
-    ).drop(*drop)
-    test = ranked.filter(F.col("__rank") > n_train + n_validate).drop(*drop)
-    return train, validate, test
+    order_cols = [F.col("__r")] + ([F.col(order_key)] if order_key else [])
+    ranked = global_row_number(
+        df.withColumn("__r", F.rand(seed)),
+        order_cols,
+        out_col="__rank",
+        n_partitions=n_partitions,
+    ).drop("__r")
+    return _cut_ranked(ranked, n_train, n_validate)
 
 
 def stratified_sample_exact(

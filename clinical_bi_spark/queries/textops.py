@@ -867,9 +867,9 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tokens. Pack assignment is a pure prefix sum, so it is exactly
 # SQL-expressible and oracle-checked. The global ordered window is the
 # small-corpus form; at 100 TB the same prefix sum decomposes into
-# per-partition sums + a driver-side offset broadcast (the
-# exact_size_seeded_split_distributed pattern in operators/split.py) —
-# the cut points are identical because addition is associative.
+# per-partition sums + broadcast offsets (operators/ranking.py
+# global_prefix_sums) — the cut points are identical because addition is
+# associative.
 # ---------------------------------------------------------------------------
 
 _PACK_CONTEXT = 2048
@@ -1667,7 +1667,7 @@ WHERE CAST(n_inter AS DOUBLE)
 JACCARD_TOKEN_MODE_ENV = "CLINICAL_BI_JACCARD_TOKENS"
 
 #: r13 verify-CPU lever, staged as the family's standard env-gated dual
-#: path (EXACT_ARITH / SINGLE_PARTITION_RANK / STATE_EVICTION /
+#: path (EXACT_ARITH / STATE_EVICTION /
 #: JACCARD_TOKENS precedent): CLINICAL_BI_JACCARD_VERIFY=bitmask swaps
 #: the verify join's per-pair ``array_intersect`` for a dense-bitmask
 #: overlap — map the corpus vocabulary to dense ids, fold each document's

@@ -495,29 +495,39 @@ def test_anomaly_mad_matches_numpy(spark, oracle_con):
         assert r.n_events == len(v)
 
 
-@pytest.mark.parametrize(
-    "name,key_cols",
-    [
-        ("evt_rfm_segmentation", ["user_id"]),
-        ("m13_auc_rank", []),
-        ("agg_equidepth_histogram", ["l_returnflag", "bucket"]),
-    ],
-)
-def test_sharded_rank_path_matches_window_path(spark, monkeypatch, name, key_cols):
-    """r9 dual-path contract: the sharded prefix-sum production form and
-    the single-partition window parity form must be VALUE-identical, row
-    for row — the property that lets the driver adjudicate the production
-    path directly against the NTILE/ROW_NUMBER SQL oracle."""
+@pytest.mark.parametrize("n_partitions", [1, 3, 8])
+def test_global_row_number_ntile_matches_window(spark, n_partitions):
+    """The sharded rank composed with ntile_from_rank is value-identical
+    to ROW_NUMBER() / NTILE(5) over one global ``Window.orderBy`` — the
+    property that lets every rank-family query be adjudicated directly
+    against its ROW_NUMBER/NTILE SQL oracle. The primary order column
+    repeats (ties ride on the tie-break) and sorts descending; the
+    result must not depend on the shard count."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
 
-    def rows(df):
-        cols = sorted(df.columns)
-        return sorted(tuple(r[c] for c in cols) for r in df.collect())
+    from clinical_bi_spark.operators.ranking import (
+        global_row_number,
+        ntile_from_rank,
+    )
 
-    monkeypatch.delenv("CLINICAL_BI_SINGLE_PARTITION_RANK", raising=False)
-    sharded = rows(REGISTRY[name].fn(spark, SF_ORACLE))
-    monkeypatch.setenv("CLINICAL_BI_SINGLE_PARTITION_RANK", "1")
-    windowed = rows(REGISTRY[name].fn(spark, SF_ORACLE))
-    assert sharded == windowed
+    df = spark.range(503).select(
+        F.col("id").alias("k"), (F.col("id") * 37 % 11).alias("v")
+    )
+    order = [F.col("v").desc(), F.col("k")]
+    ranked = global_row_number(df, order, n_partitions=n_partitions)
+    nt = ntile_from_rank(F.col("rnk"), F.lit(df.count()), 5).alias("nt")
+    got = {r.k: (r.rnk, r.nt) for r in ranked.select("k", "rnk", nt).collect()}
+    w = Window.orderBy(*order)
+    want = {
+        r.k: (r.rnk, r.nt)
+        for r in df.select(
+            "k",
+            F.row_number().over(w).alias("rnk"),
+            F.ntile(5).over(w).alias("nt"),
+        ).collect()
+    }
+    assert got == want
 
 
 @pytest.mark.slow  # depth tier (r17): dual-path/property sweep
@@ -710,37 +720,6 @@ def test_global_row_number_empty_and_single_row(spark):
 
     one = spark.range(1).select(F.col("id").alias("k"), F.lit(1.0).alias("v"))
     assert [r.rnk for r in global_row_number(one, [F.col("v"), F.col("k")]).collect()] == [1]
-
-
-def test_global_row_number_null_group_keys(spark):
-    """r9 ADVICE: NULL partition_by keys must rank as their own group —
-    dropna grouping NaN'd the cumcount and the plain offset equi-join
-    restarted null-key ranks per partition. Differential vs the window
-    form on a relation where a third of the keys are NULL."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from clinical_bi_spark.operators.ranking import global_row_number
-
-    df = spark.range(300).select(
-        F.when(F.col("id") % 3 == 0, None)
-        .otherwise((F.col("id") % 3).cast("string"))
-        .alias("g"),
-        (F.col("id") * 37 % 101).alias("v"),
-        F.col("id").alias("k"),
-    )
-    got = {
-        (r.g, r.k): r.rnk
-        for r in global_row_number(
-            df, [F.col("v"), F.col("k")], partition_by=["g"], n_partitions=7
-        ).collect()
-    }
-    w = Window.partitionBy("g").orderBy("v", "k")
-    want = {
-        (r.g, r.k): r.rnk
-        for r in df.select("g", "k", F.row_number().over(w).alias("rnk")).collect()
-    }
-    assert got == want
 
 
 def test_global_prefix_sums_matches_window_and_boundaries(spark):

@@ -124,33 +124,29 @@ def test_distributed_exact_split_contract(spark):
     assert "SinglePartition" not in buf.getvalue()
 
 
-def test_pack_distributed_equals_window(spark):
-    """The per-partition prefix-sum packing equals the global-window form
-    value for value — the 100 TB decomposition changes the plan, never
-    the cut points."""
-    from clinical_bi_spark.functions.text import token_count
-    from clinical_bi_spark.operators.packing import (
-        pack_assignments_distributed,
-        pack_assignments_window,
+@pytest.mark.parametrize("n_partitions", [1, 3, 8])
+def test_distributed_split_matches_window_split(spark, n_partitions):
+    """Layout independence: the sharded split and the single-window
+    parity split rank the same (rand(seed), order_key) total order, so
+    they cut the same train/validate/test membership whatever the shard
+    count."""
+    from clinical_bi_spark.operators.split import (
+        exact_size_seeded_split_distributed,
     )
-    from tests.conftest import SF_ORACLE
 
-    toks = (
-        spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
-        .select(
-            "doc_id",
-            token_count(F.col("text")).cast("bigint").alias("n_tokens"),
+    df = spark.range(2_000).withColumnRenamed("id", "k")
+    ids = lambda d: {r.k for r in d.collect()}  # noqa: E731
+    want = [
+        ids(d) for d in exact_size_seeded_split(df, 0.7, 0.05, seed=7, order_key="k")
+    ]
+    got = [
+        ids(d)
+        for d in exact_size_seeded_split_distributed(
+            df, 0.7, 0.05, seed=7, order_key="k", n_partitions=n_partitions
         )
-    )
-    cols = ["doc_id", "n_tokens", "start_offset", "pack_id", "crosses_boundary"]
-    w = {tuple(r) for r in pack_assignments_window(toks).select(cols).collect()}
-    d = {
-        tuple(r)
-        for r in pack_assignments_distributed(toks, n_partitions=7)
-        .select(cols)
-        .collect()
-    }
-    assert w == d and len(w) == 500
+    ]
+    assert [len(s) for s in want] == [1400, 100, 500]
+    assert got == want
 
 
 def test_lmg_matches_independent_permutation_implementation():

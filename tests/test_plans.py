@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import contextlib
 import io
-import os
 import re
 
 import pytest
@@ -538,17 +537,60 @@ def test_welch_partial_aggregation(spark):
     assert plan.count("HashAggregate") >= 2, plan
 
 
+def _window_partition_specs(plan: str) -> list[str]:
+    """The partition spec of every ``Window`` node of a formatted plan:
+    the second top-level bracketed list of its ``Arguments:`` line, e.g.
+    ``Arguments: [...], [__pid#4, g#1L], [o#2L ASC NULLS FIRST]`` ->
+    ``__pid#4, g#1L`` (the lists are window exprs, partition spec,
+    order spec)."""
+    specs = []
+    for block in plan.split("\n\n"):
+        if not re.match(r"\(\d+\) Window\s*$", block.strip().split("\n")[0]):
+            continue
+        args = re.search(r"^Arguments: (.*)$", block, re.M)
+        assert args, block  # a Window operator must expose its spec
+        lists, depth, start = [], 0, 0
+        for i, ch in enumerate(args.group(1)):
+            if ch == "[":
+                if depth == 0:
+                    start = i + 1
+                depth += 1
+            elif ch == "]":
+                depth -= 1
+                if depth == 0:
+                    lists.append(args.group(1)[start:i])
+        assert len(lists) == 3, block
+        specs.append(lists[1])
+    return specs
+
+
 def _assert_windows_are_pid_local(plan: str) -> None:
     """Every Window in the plan must be the rank machinery's local
     cumsum: partitioned by the range-partition id ``__pid`` (population
     = one range shard — can never funnel). A window spec WITHOUT __pid
-    in its partition clause (above all an empty/global one) is exactly
-    the SinglePartition funnel this family's pin forbids."""
-    specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
-    if "Window" in plan:
-        assert specs, plan  # a Window operator must expose its spec
-    for spec in specs:
+    in its partition clause (above all an empty/global one, even one
+    ordered by __pid) is exactly the SinglePartition funnel this
+    family's pin forbids."""
+    for spec in _window_partition_specs(plan):
         assert "__pid#" in spec, plan
+
+
+def test_window_pin_rejects_global_window_over_pid(spark):
+    """The pin reads the partition spec, not the whole window spec: a
+    global window merely ORDERED by __pid must fail it, a window
+    partitioned by __pid must pass."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    df = spark.range(10).withColumn("__pid", F.spark_partition_id())
+    rn = F.row_number()
+    by_pid = Window.partitionBy("__pid").orderBy("id")
+    _assert_windows_are_pid_local(_explain_df(df.withColumn("rn", rn.over(by_pid))))
+    global_w = Window.orderBy("__pid")
+    with pytest.raises(AssertionError):
+        _assert_windows_are_pid_local(
+            _explain_df(df.withColumn("rn", rn.over(global_w)))
+        )
 
 
 @pytest.mark.parametrize(
@@ -579,7 +621,6 @@ def test_sharded_rank_production_plan_has_no_single_partition(spark, name):
     it is exactly the shape this pin exists to allow. Every other
     window spec (anything not partitioned by __pid, in particular a
     global/empty partition spec) stays forbidden."""
-    assert "CLINICAL_BI_SINGLE_PARTITION_RANK" not in os.environ
     plan = explain(spark, name)
     assert "ntile" not in plan, plan
     assert "row_number" not in plan, plan
@@ -597,33 +638,72 @@ def test_sharded_rank_production_plan_has_no_single_partition(spark, name):
         assert "SinglePartition" not in plan, plan
 
 
-def test_rfm_parity_path_windows_run_over_entity_relation(spark, monkeypatch):
-    """The flagged single-partition parity form keeps its r8 contract:
-    the ntile windows run over the AGGREGATED per-user relation, i.e. the
-    user_id HashAggregate executes before (is listed after) the first
-    SinglePartition exchange."""
-    monkeypatch.setenv("CLINICAL_BI_SINGLE_PARTITION_RANK", "1")
-    plan = explain(spark, "evt_rfm_segmentation")
-    assert "ntile" in plan, plan  # parity form must use the window
-    lines = plan.splitlines()
-    # formatted-explain detail sections are "(N) Operator" with N
-    # increasing towards the root: a smaller id executes earlier
-    single_ids = [
-        int(m.group(1))
-        for i, l in enumerate(lines)
-        if (m := re.match(r"\((\d+)\) Exchange", l.strip()))
-        and any("SinglePartition" in x for x in lines[i : i + 3])
-    ]
-    agg_ids = [
-        int(m.group(1))
-        for l in lines
-        if (m := re.match(r"\((\d+)\) HashAggregate", l.strip()))
-    ]
-    assert single_ids, plan
-    assert agg_ids, plan
-    # the per-user aggregation must execute BEFORE any single-partition
-    # exchange: the windows see only the entity relation
-    assert min(agg_ids) < min(single_ids), plan
+#: The engine's CLINICAL_BI_* env switches. Each one is a second code
+#: path; a new one must be added here deliberately.
+_ENGINE_KNOBS = {
+    "CLINICAL_BI_EXACT_ARITH",
+    "CLINICAL_BI_JACCARD_TOKENS",
+    "CLINICAL_BI_JACCARD_VERIFY",
+    "CLINICAL_BI_STATE_EVICTION",
+}
+
+
+def _engine_env_reads() -> set[str]:
+    """CLINICAL_BI_* names the engine source reads: the first argument
+    of ``os.environ.get`` / ``os.getenv``, an ``os.environ[...]``
+    subscript, or a module-level ``*_ENV = "..."`` constant. Docstrings
+    and comments do not count."""
+    import ast
+    import pathlib
+
+    def is_environ(node) -> bool:
+        return (
+            isinstance(node, ast.Attribute)
+            and node.attr == "environ"
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "os"
+        )
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "clinical_bi_spark"
+    found = set()
+    for path in root.rglob("*.py"):
+        tree = ast.parse(path.read_text(), str(path))
+        names = []
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and node.args:
+                f = node.func
+                if isinstance(f, ast.Attribute) and (
+                    (f.attr == "get" and is_environ(f.value))
+                    or (
+                        f.attr == "getenv"
+                        and isinstance(f.value, ast.Name)
+                        and f.value.id == "os"
+                    )
+                ):
+                    names.append(node.args[0])
+            elif isinstance(node, ast.Subscript) and is_environ(node.value):
+                names.append(node.slice)
+        for node in tree.body:
+            if isinstance(node, ast.Assign) and any(
+                isinstance(t, ast.Name) and t.id.endswith("_ENV")
+                for t in node.targets
+            ):
+                names.append(node.value)
+        found |= {
+            n.value
+            for n in names
+            if isinstance(n, ast.Constant)
+            and isinstance(n.value, str)
+            and n.value.startswith("CLINICAL_BI_")
+        }
+    return found
+
+
+def test_engine_env_knob_inventory():
+    """Every dual-path env switch the engine reads is listed in
+    _ENGINE_KNOBS — a new switch shows up in review, a removed one must
+    be struck from the list."""
+    assert _engine_env_reads() == _ENGINE_KNOBS
 
 
 def test_cusum_reuses_one_user_exchange(spark):
