@@ -420,7 +420,11 @@ def main() -> None:
     # capture. All values are rounded to 3 decimals above; the assert
     # fails loudly at run time if registry growth ever pushes the line
     # past a conservative 16 KiB (the r17 line is ~2.6 KiB at 57
-    # queries), instead of silently producing an unparseable round.
+    # queries), instead of silently producing an unparseable round. A
+    # line that trips the guard goes to stderr first, so its timings
+    # survive the failure.
+    if len(line) >= 16384:
+        print(line, file=sys.stderr, flush=True)
     assert len(line) < 16384, f"bench JSON line too large: {len(line)} bytes"
     print(line, flush=True)
 

@@ -30,6 +30,15 @@ exact integer arithmetic (first ``N mod k`` buckets take ``N div k + 1``
 rows, the rest ``N div k``), so the composition is value-identical to
 ``F.ntile(k).over(...)`` — pinned differentially in
 tests/test_analytics.py.
+
+k total orders over one relation of N rows need not cost k passes:
+stack k tagged copies (tag ``i`` in 0..k-1, e.g. ``explode`` of a
+literal array), carry copy ``i``'s sort key in typed columns that are
+NULL on every other tag, and rank once over (tag, keys..., tie-break).
+Within a tag the other tags' key columns are constant NULL, so the order
+restricted to tag ``i`` is exactly order ``i``; each tag block holds N
+rows, so order ``i``'s rank is the global rank minus ``i * N``.
+``evt_rfm_segmentation`` ranks its three quintile orders this way.
 """
 
 from __future__ import annotations

@@ -1093,7 +1093,9 @@ def agg_ttest_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the event stream — recency (days since last event, vs corpus max),
 # frequency (event count), monetary (value sum in exact micro-units) —
 # each scored 1..5 by ntile over a DETERMINISTIC total order (metric,
-# then user_id), so the segmentation is engine-exact.
+# then user_id), so the segmentation is engine-exact. The three orders
+# share one sharded rank pass over a three-way tagged stack of the
+# per-user relation.
 # ---------------------------------------------------------------------------
 
 _RFM_ORACLE = """
@@ -1133,14 +1135,19 @@ def evt_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id) total orders so bucket assignment is deterministic on both
     engines.
 
-    Three passes of
-    :func:`clinical_bi_spark.operators.ranking.global_row_number`
+    All three rankings run in ONE
+    :func:`clinical_bi_spark.operators.ranking.global_row_number` pass
     (range exchange + local row index + broadcast prefix offsets, never
     a SinglePartition sort; the per-user ENTITY relation is itself
-    billions of rows at 100 TB) composed with ``ntile_from_rank``'s exact
-    NTILE(5) bucket arithmetic, adjudicated directly against the NTILE
-    SQL oracle; tests/test_plans.py asserts the plan has no
-    SinglePartition exchange."""
+    billions of rows at 100 TB): ``per_user`` is stacked three times
+    under a tag ``__which``, each copy carrying its metric in a typed
+    null-elsewhere key column, and the stacked relation is ranked once
+    over (tag, keys, user_id). Each tag block holds exactly N rows, so
+    the per-metric rank is the global rank minus tag x N, fed to
+    ``ntile_from_rank``'s exact NTILE(5) bucket arithmetic and pivoted
+    back per user. Adjudicated directly against the NTILE SQL oracle;
+    tests/test_plans.py asserts the plan has no SinglePartition exchange
+    and exactly one range exchange."""
     from clinical_bi_spark.operators.ranking import (
         global_row_number,
         ntile_from_rank,
@@ -1158,36 +1165,56 @@ def evt_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The corpus max event time is the max of the per-user maxes, so
     # read it off the (persisted) entity relation instead of a second
     # full scan of the fact table — identical double, one fewer events
-    # pass. The persist sits ABOVE the scalar action so the cache is
-    # populated by it (the count below then reads cache).
+    # pass. Both scalars come from ONE eager action and are inlined as
+    # literals (a lazy cross-join would plan a SinglePartition exchange).
+    # The persist sits ABOVE the action so the action populates the cache.
     per_user = persist_tracked(per_user)
-    emax = per_user.agg(F.max("last_e")).first()[0]
-    recency = (
-        F.floor((F.lit(float(emax)) - F.col("last_e")) / 86400.0)
-        .cast("bigint")
-        .alias("recency_days")
+    emax, n_users = per_user.agg(F.max("last_e"), F.count("*")).first()
+    n_lit = F.lit(int(n_users)).cast("bigint")
+    # Three total orders over one relation = one rank pass over three
+    # tagged copies. Within a tag the other key column is constant NULL,
+    # so [__which, __kd DESC, __kl DESC, user_id] restricted to a tag is
+    # exactly that metric's (metric DESC, user_id) order.
+    which = F.col("__which")
+    tags = F.array(F.lit(0), F.lit(1), F.lit(2))
+    stacked = (
+        per_user.withColumn("__which", F.explode(tags))
+        .withColumn("__kd", F.when(which == 0, F.col("last_e")))
+        .withColumn(
+            "__kl",
+            F.when(which == 1, F.col("frequency")).when(
+                which == 2, F.col("monetary_micro")
+            ),
+        )
     )
-    n_users = per_user.count()  # one scalar (cache-served), inlined
     ranked = global_row_number(
-        per_user, [F.col("last_e").desc(), F.col("user_id")], out_col="__r_rnk"
+        stacked,
+        [which, F.col("__kd").desc(), F.col("__kl").desc(), F.col("user_id")],
+        out_col="__rnk",
     )
-    ranked = global_row_number(
-        ranked, [F.col("frequency").desc(), F.col("user_id")], out_col="__f_rnk"
-    )
-    ranked = global_row_number(
-        ranked,
-        [F.col("monetary_micro").desc(), F.col("user_id")],
-        out_col="__m_rnk",
-    )
-    n_lit = F.lit(int(n_users))
-    scored = ranked.select(
-        "user_id",
-        recency,
-        "frequency",
-        "monetary_micro",
-        ntile_from_rank(F.col("__r_rnk"), n_lit, 5).alias("r_score"),
-        ntile_from_rank(F.col("__f_rnk"), n_lit, 5).alias("f_score"),
-        ntile_from_rank(F.col("__m_rnk"), n_lit, 5).alias("m_score"),
+    score = ntile_from_rank(F.col("__rnk") - which * n_lit, n_lit, 5)
+    scored = (
+        ranked.groupBy("user_id")
+        .agg(
+            F.max("last_e").alias("last_e"),
+            F.max("frequency").alias("frequency"),
+            F.max("monetary_micro").alias("monetary_micro"),
+            *[
+                F.max(F.when(which == i, score)).alias(name)
+                for i, name in enumerate(("r_score", "f_score", "m_score"))
+            ],
+        )
+        .select(
+            "user_id",
+            F.floor((F.lit(float(emax)) - F.col("last_e")) / 86400.0)
+            .cast("bigint")
+            .alias("recency_days"),
+            "frequency",
+            "monetary_micro",
+            "r_score",
+            "f_score",
+            "m_score",
+        )
     )
     return scored.withColumn(
         "segment",

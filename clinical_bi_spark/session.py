@@ -37,8 +37,10 @@ RUNTIME_CONF: dict[str, str] = {
     # tables in the domain pipeline) comfortably fit: let Catalyst broadcast
     # aggressively. At 100 TB the dims are still tiny relative to facts.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    # The events fixture stores TIMESTAMP(NANOS) which the vectorized parquet
-    # reader rejects; read as long and convert (sources._normalize_events).
+    # A parquet TIMESTAMP(NANOS) ts column, which the vectorized parquet
+    # reader rejects, is read as a long and converted
+    # (sources.normalize_events). The sf* events fixtures store
+    # TIMESTAMP(MICROS, not UTC-adjusted) instead, read as TIMESTAMP_NTZ.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # NOT set (r17, tried and reverted): lowering
     # spark.sql.files.openCostInBytes below its 4 MiB default. The floor

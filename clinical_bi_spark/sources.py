@@ -71,16 +71,15 @@ def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> Tables:
 
 
 def normalize_events(df: DataFrame) -> DataFrame:
-    """The events fixture stores ts as parquet TIMESTAMP(NANOS). Depending
-    on the session's conf timing Spark surfaces that either as a
-    nanosecond long (spark.sql.legacy.parquet.nanosAsLong, set in
-    session.RUNTIME_CONF) or as TIMESTAMP_NTZ (micros-truncated, the
-    reader's native nanos handling). Normalize BOTH to a proper
-    TimestampType column: every consumer — including streaming
-    withWatermark, which rejects TIMESTAMP_NTZ event time — sees one
-    type, and the values match DuckDB's micros truncation. The NTZ→TZ
-    cast is value-preserving because session.RUNTIME_CONF pins the
-    session timezone to UTC."""
+    """The sf* events fixtures store ts as parquet INT64
+    TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark reads as
+    TIMESTAMP_NTZ. A TIMESTAMP(NANOS) ts column would instead surface as
+    a nanosecond long (spark.sql.legacy.parquet.nanosAsLong, set in
+    session.RUNTIME_CONF). Normalize BOTH to a proper TimestampType
+    column: every consumer — including streaming withWatermark, which
+    rejects TIMESTAMP_NTZ event time — sees one type, and the values
+    match DuckDB's micros. The NTZ→TZ cast is value-preserving because
+    session.RUNTIME_CONF pins the session timezone to UTC."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType
 

@@ -582,6 +582,65 @@ def test_global_row_number_total_tie_stress(spark):
     assert got == {k: k + 1 for k in range(500)}
 
 
+@pytest.mark.parametrize(
+    "mono", [False, True, "nulls"], ids=["zeros", "monokey", "nulls"]
+)
+def test_rfm_degenerate_corpora_match_oracle(spark, tmp_path, mono):
+    """evt_rfm_segmentation ranks its three metrics in one pass over a
+    tagged stack. On these corpora the monetary metric ties (every sum
+    is 0 in zeros) or is NULL (nulls), and monokey has one user at one
+    instant (N < 5 buckets), so the user_id tie-break decides the
+    buckets and NULL keys must sort last under DESC, as in the NTILE
+    oracle."""
+    import duckdb
+
+    from clinical_bi_spark.queries.extended import (
+        _RFM_ORACLE,
+        evt_rfm_segmentation,
+    )
+    from scripts.degenerate_probe import build_corpus
+    from tests.conftest import assert_matches_oracle
+
+    d = str(tmp_path)
+    build_corpus(spark, d, mono)
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{d}/events.parquet/*.parquet')"
+    )
+    try:
+        assert_matches_oracle(
+            evt_rfm_segmentation(spark, d), con, _RFM_ORACLE, name=str(mono)
+        )
+    finally:
+        con.close()
+
+
+@pytest.mark.parametrize("n_shuffle", [1, 8])
+def test_rfm_matches_oracle_at_shuffle_partitions(
+    spark, oracle_con, monkeypatch, n_shuffle
+):
+    """The stacked rank and the per-user pivot must not depend on the
+    shuffle partition count. ``tune()`` sets spark.sql.shuffle.partitions
+    from SPARK_GRAFT_CPUS on every query build, so the sweep goes through
+    that variable; the session's setting is restored afterwards."""
+    from clinical_bi_spark.queries.extended import (
+        _RFM_ORACLE,
+        evt_rfm_segmentation,
+    )
+    from tests.conftest import assert_matches_oracle
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", str(n_shuffle))
+    try:
+        df = evt_rfm_segmentation(spark, SF_ORACLE)
+        assert spark.conf.get(key) == str(n_shuffle)
+        assert_matches_oracle(df, oracle_con, _RFM_ORACLE, name=str(n_shuffle))
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_degenerate_inputs_yield_null_not_ansi_crash(spark, tmp_path):
     """r9 family-wide sweep of the PMI zero-token lesson: zero-variance
     columns, single-class labels, and sub-k corpora made five queries

@@ -638,6 +638,19 @@ def test_sharded_rank_production_plan_has_no_single_partition(spark, name):
         assert "SinglePartition" not in plan, plan
 
 
+def test_rfm_ranks_three_orders_in_one_range_pass(spark):
+    """evt_rfm_segmentation's three quintile orders share ONE sharded
+    rank pass over a tagged stack of the per-user relation: exactly one
+    range exchange, where one rank pass per order would plan three.
+    Caches are released first: a materialized cache of an earlier run
+    prints its own copy of the exchange inside the InMemoryRelation."""
+    from clinical_bi_spark import caching
+
+    caching.release_all(spark)
+    plan = explain(spark, "evt_rfm_segmentation")
+    assert plan.lower().count("rangepartitioning") == 1, plan
+
+
 #: The engine's CLINICAL_BI_* env switches. Each one is a second code
 #: path; a new one must be added here deliberately.
 _ENGINE_KNOBS = {
